@@ -23,16 +23,13 @@ EVDIR = "/tmp/evlog"
 
 OVERLAYS: dict[str, dict[str, str]] = {
     "base": {},
-    # Spark-default cached-plan partitioning: repartition(col).cache()
-    # keeps its HashPartitioning visible to consumers (see ab_rung.py —
-    # at the 554k rung the true setting re-exchanges the full bucket
-    # tables once per pairs_from_buckets leg, 4.7 GB vs 1.8 GB written).
-    "cachedpart_off": {
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "false",
-    },
     # AQE optimizes cached-plan partitioning too: repartition(col).cache()
     # no longer pins spark.sql.shuffle.partitions tasks into every
-    # downstream scan — partitions are coalesced by size.
+    # downstream scan — partitions are coalesced by size. The session
+    # keeps the Spark default (false), so this is the live counterfactual
+    # (see ab_rung.py cachedpart_on — at the 554k rung the true setting
+    # re-exchanges the full bucket tables once per pairs_from_buckets
+    # leg, 4.7 GB vs 1.8 GB written).
     "aqe_cache": {
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     },

@@ -22,14 +22,31 @@ EVDIR = "/tmp/evlog_abrung"
 
 OVERLAYS: dict[str, dict[str, str]] = {
     "base": {},
-    # Default-Spark posture for cached-plan partitioning: a
-    # repartition(col).cache() keeps its HashPartitioning visible, so
-    # the 4 consumer legs of pairs_from_buckets reuse the cached layout
-    # instead of re-exchanging the full bucket table per leg.
-    "cachedpart_off": {
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "false",
+    # Counterfactual to the session's default-Spark posture (false):
+    # with true, a repartition(col).cache() hides its HashPartitioning,
+    # so the 4 consumer legs of pairs_from_buckets each re-exchange the
+    # full bucket table instead of reusing the cached layout.
+    "cachedpart_on": {
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     },
 }
+
+
+def _event_lines(app_id: str):
+    """Lines of the app's event log: the single file, or every
+    ``events_<n>_*`` part of a rolled log in roll order (a part number
+    sorts numerically: events_10 follows events_9)."""
+    evp = os.path.join(EVDIR, app_id)
+    if os.path.exists(evp):
+        paths = [evp]
+    else:
+        d = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
+        parts = [p for p in os.listdir(d) if p.startswith("events_")]
+        parts.sort(key=lambda p: int(p.split("_")[1]))
+        paths = [os.path.join(d, p) for p in parts]
+    for path in paths:
+        with open(path) as f:
+            yield from f
 
 
 def main() -> None:
@@ -71,25 +88,19 @@ def main() -> None:
 
     n_jobs = n_stages = n_tasks = 0
     sh_write_mb = 0.0
-    evp = os.path.join(EVDIR, app_id)
-    if not os.path.exists(evp):
-        d = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
-        parts = [p for p in os.listdir(d) if p.startswith("events_")]
-        evp = os.path.join(d, sorted(parts)[0])
-    with open(evp) as f:
-        for line in f:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                n_jobs += 1
-            elif e == "SparkListenerStageCompleted":
-                n_stages += 1
-                n_tasks += ev["Stage Info"]["Number of Tasks"]
-            elif e == "SparkListenerTaskEnd":
-                tm = ev.get("Task Metrics") or {}
-                sh_write_mb += (tm.get("Shuffle Write Metrics") or {}).get(
-                    "Shuffle Bytes Written", 0
-                ) / 1e6
+    for line in _event_lines(app_id):
+        ev = json.loads(line)
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            n_jobs += 1
+        elif e == "SparkListenerStageCompleted":
+            n_stages += 1
+            n_tasks += ev["Stage Info"]["Number of Tasks"]
+        elif e == "SparkListenerTaskEnd":
+            tm = ev.get("Task Metrics") or {}
+            sh_write_mb += (tm.get("Shuffle Write Metrics") or {}).get(
+                "Shuffle Bytes Written", 0
+            ) / 1e6
 
     print(json.dumps({
         "overlay": overlay_name, "n_base": n_base, "wall_s": wall,

@@ -87,7 +87,9 @@ def main() -> None:
 
     t0 = time.time()
     if variant == "v0":
-        pairs, hot = substr_candidates(fps, cfg, eager=True)
+        # scratch=[] as the pipeline passes it: the shipped eager path
+        # (its tagged join-back cache is gated on a caller scratch list)
+        pairs, hot = substr_candidates(fps, cfg, eager=True, scratch=[])
     elif variant == "v0copy":
         pairs = variant_candidates(fps)
     elif variant == "tag_cache":

@@ -31,6 +31,7 @@ import time
 import uuid
 from collections import defaultdict
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -172,6 +173,32 @@ class Catalog:
     def manifest(self, ident: str) -> dict:
         with open(os.path.join(self._path(ident), "_MANIFEST.json")) as f:
             return json.load(f)
+
+    def row_count(self, ident: str) -> int:
+        """Rows in the table. Parquet fallback: the count each commit
+        records in the manifest — a metadata read, no Spark job. Iceberg
+        and tables committed before counts were recorded: a count()."""
+        if not self.iceberg_catalog:
+            n = self.manifest(ident).get("num_rows")
+            if n is not None:
+                return n
+        return self.read(ident).count()
+
+    def may_hold(self, ident: str, col: str, value) -> bool:
+        """False only when the table provably holds no row with
+        ``col == value``: a parquet-fallback table hive-partitioned on
+        ``col`` (leading key) that has no ``col=value`` directory, or an
+        empty one. Callers skip a guard read on False, so anything this
+        cannot rule out (Iceberg, other layouts) answers True."""
+        if self.iceberg_catalog:
+            return True
+        man = self.manifest(ident)
+        if "empty_schema" in man:
+            return False
+        if (man.get("partition_by") or [None])[0] != col:
+            return True
+        return os.path.isdir(
+            os.path.join(self._path(ident), "data", f"{col}={value}"))
 
     def properties(self, ident: str) -> dict:
         """Table metadata key/values: Iceberg table properties (written as
@@ -369,6 +396,7 @@ class Catalog:
         base = self._path(ident)
         base_snapshot = None
         merge_schema = False
+        prior_rows: int | None = 0
         if mode == "append" and self.exists(ident):
             # ONE in-lock manifest read serves the optimistic-concurrency
             # base snapshot AND the layout inheritance below: reading it
@@ -381,6 +409,8 @@ class Catalog:
             # optimistic single-writer check (module docstring): remember
             # the snapshot this append builds on; verified again at commit
             base_snapshot = start_man.get("snapshot_id")
+            prior_rows = (0 if "empty_schema" in start_man
+                          else start_man.get("num_rows"))
             # the committed manifest is rebuilt from THIS call's args, so
             # a plain append (which naturally re-passes no layout) must
             # inherit the table's recorded clustering/meta — otherwise
@@ -432,31 +462,6 @@ class Catalog:
                 raise ValueError(
                     f"append to {ident}: partition_by={partition_by!r} does not "
                     f"match the table's existing layout {existing!r}")
-        if partition_by and df.isEmpty():
-            if mode == "append" and self.exists(ident):
-                # appending nothing to an existing table is a no-op
-                return
-            # overwrite (or first write) of zero rows must still truncate /
-            # create the table: a hive-partitioned write of zero rows yields
-            # no schema-bearing files, so commit a manifest that carries the
-            # schema out-of-band and an empty data dir (read() reconstructs
-            # the empty frame; Iceberg keeps schema in metadata natively)
-            tmp = f"{base}.tmp-{uuid.uuid4().hex[:8]}"
-            os.makedirs(os.path.join(tmp, "data"))
-            man = {
-                "ident": ident,
-                "snapshot_id": uuid.uuid4().hex,
-                "committed_at": time.time(),
-                "meta": meta or {},
-                "partition_by": partition_by,
-                "empty_schema": df.schema.json(),
-            }
-            with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
-                json.dump(man, f)
-            if os.path.exists(base):
-                shutil.rmtree(base)
-            os.rename(tmp, base)
-            return
         # physical clustering runs HERE, after the in-lock layout
         # inheritance above, so a plain append to a sorted/z-ordered
         # table lands its snapshot clustered (ADVICE.md r5 — the r5
@@ -471,20 +476,50 @@ class Catalog:
                 self.spark.sparkContext.defaultParallelism, *sort_by
             ).sortWithinPartitions(*sort_by)
         tmp = f"{base}.tmp-{uuid.uuid4().hex[:8]}"
+        tmp_data = os.path.join(tmp, "data")
         try:
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            writer.parquet(os.path.join(tmp, "data"))
+            writer.parquet(tmp_data)
         finally:
             if zsrc is not None:
                 zsrc.unpersist()
+        # the write's own output says how many rows it holds (parquet
+        # footers, driver-side): no separate isEmpty()/count() job that
+        # recomputes the frame the write just computed
+        parts = [os.path.join(root, fn)
+                 for root, _dirs, files in os.walk(tmp_data)
+                 for fn in files if fn.endswith(".parquet")]
+        n_rows = sum(pq.read_metadata(p).num_rows for p in parts)
         man = {
             "ident": ident,
             "snapshot_id": uuid.uuid4().hex,
             "committed_at": time.time(),
             "meta": meta or {},
         }
+        if partition_by and not parts:
+            # a hive-partitioned write of zero rows yields no files at all
+            if mode == "append" and self.exists(ident):
+                # appending nothing to an existing table is a no-op
+                shutil.rmtree(tmp)
+                return
+            # overwrite (or first write) of zero rows must still truncate /
+            # create the table, so commit a manifest that carries the
+            # schema out-of-band and an empty data dir (read() reconstructs
+            # the empty frame; Iceberg keeps schema in metadata natively)
+            man.update(partition_by=partition_by,
+                       empty_schema=df.schema.json(), num_rows=0)
+            with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
+                json.dump(man, f)
+            if os.path.exists(base):
+                shutil.rmtree(base)
+            os.rename(tmp, base)
+            return
+        # running row count (row_count()): appends add to the snapshot
+        # they build on; a base that predates counting stays uncounted
+        if prior_rows is not None:
+            man["num_rows"] = prior_rows + n_rows
         if partition_by:
             man["partition_by"] = partition_by
         if sort_by:
@@ -517,7 +552,6 @@ class Catalog:
                 )
             man["base_snapshot"] = base_snapshot
             data_dir = os.path.join(base, "data")
-            tmp_data = os.path.join(tmp, "data")
             stamp = uuid.uuid4().hex[:8]
             i = 0
             for root, _dirs, files in os.walk(tmp_data):

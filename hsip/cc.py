@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .session import session_confs
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect each strictly-larger neighbor of u to min(N(u) ∪ {u})."""
@@ -185,16 +187,10 @@ def connected_components(
     # ~16 s per run regardless of executor count. AQE's runtime re-plan
     # buys nothing here (sizes are known-small after round 0), so run
     # the loop with AQE off and a small fixed shuffle width instead.
-    _tuned = {
+    with session_confs({
         "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(
-            max(8, 2 * sc.defaultParallelism)
-        ),
-    }
-    _saved = {k: spark.conf.get(k, None) for k in _tuned}
-    for k, v in _tuned.items():
-        spark.conf.set(k, v)
-    try:
+        "spark.sql.shuffle.partitions": str(max(8, 2 * sc.defaultParallelism)),
+    }, spark):
         prev = _checksum(e)
         for rnd in range(max_iter):
             sc.setJobDescription(f"hsip:cc_round_{rnd}")
@@ -215,12 +211,6 @@ def connected_components(
                 f"connected_components did not converge in {max_iter} "
                 "star rounds; raise max_iter or inspect the edge set"
             )
-    finally:
-        for k, v in _saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # converged: star graphs, every edge points (member -> component min)
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
     roots = e.select(F.col("dst").alias("id")).distinct().withColumn(

@@ -35,6 +35,7 @@ from .lsh import band_table, lsh_candidates, pairs_from_buckets
 from .metrics import Recorder, StageTimer
 from .minhash import attach_minhash
 from .reassemble import dedupe_turn_versions, reassemble
+from .session import latency_regime
 from .shingle import shingle_docs
 from .simhash import attach_simhash, hamming_block_table, simhash_candidates
 from .suffixes import (
@@ -212,39 +213,20 @@ def run_documents(
     eager_barriers = n_docs >= cfg.eager_barrier_min_docs
     stats["eager_barriers"] = eager_barriers
 
-    # Latency-tune the small-corpus regime, the same way the CC loop
-    # tunes its rounds (hsip/cc.py): below the eager barrier the chains
-    # are dozens of tiny exchanges, and with AQE each exchange becomes
-    # its own query-stage materialization job — ~150 driver round-trips
-    # per run at bench scale (r6 event log), a serial floor no executor
-    # count amortizes. AQE's runtime re-planning buys nothing on
-    # kB-sized shuffles, so: AQE off + a shuffle width derived from the
-    # corpus (~500 docs/partition, floor 8, cap = the ambient 2x-cores
-    # width) for the duration of this run; restored in the finally
-    # below. r6 A/B at 57k turns: 10.4 s -> 7.8 s, identical output.
-    # At/above the barrier (the 100-TB direction) everything stays at
-    # session defaults — AQE coalescing, skew splits and the wide
-    # shuffle width are exactly right for data that size.
-    _tuned_conf: dict[str, str] = {}
+    # Latency-tune the small-corpus regime (session.latency_regime: AQE
+    # off + a corpus-derived shuffle width below the barrier, restored
+    # when the block exits). r6 A/B at 57k turns: 10.4 s -> 7.8 s,
+    # identical output. At/above the barrier everything stays at session
+    # defaults.
     base_cached = base
-    if not eager_barriers:
-        ambient = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        width = max(8, min(int(ambient), -(-n_docs // 500)))
-        _tuned_conf = {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": str(width),
-        }
+    with latency_regime(n_docs, cfg.eager_barrier_min_docs, spark) as width:
         # base materialized under the ambient (wide) conf; narrow the
         # downstream VIEW of it to the derived width so channel scans
         # don't schedule dozens of near-empty tasks per pass. coalesce
         # is a narrow op over the already-populated cache — no shuffle,
         # no recompute; base_cached keeps the handle unpersist() needs.
-        if base.rdd.getNumPartitions() > 2 * width:
+        if width is not None and base.rdd.getNumPartitions() > 2 * width:
             base = base.coalesce(width)
-    _saved_conf = {k: spark.conf.get(k, None) for k in _tuned_conf}
-    for _k, _v in _tuned_conf.items():
-        spark.conf.set(_k, _v)
-    try:
 
         if need_sh:
             # key-entropy advisory (config.py simhash_bits sizing rule): fail
@@ -684,15 +666,6 @@ def run_documents(
 
         # result frames (verified/clusters/reps) are materialized; base has no
         # remaining consumer
-    finally:
-        # restore the session's ambient shuffle/AQE posture whether or
-        # not the run succeeded (the session is shared: tests and
-        # long-lived drivers run many pipelines per session)
-        for _k, _v in _saved_conf.items():
-            if _v is None:
-                spark.conf.unset(_k)
-            else:
-                spark.conf.set(_k, _v)
     base_cached.unpersist()
     return PipelineResult(
         clusters=clusters, verified=verified, representatives=reps,

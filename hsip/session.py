@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -133,9 +134,12 @@ def get_spark(
         # .py; bit-identical labels). The small-corpus task-count
         # problem it once solved (64-task scans of kB caches) is owned
         # by the pipeline's latency mode now (AQE off + derived width
-        # below eager_barrier_min_docs), where this flag is never
-        # consulted — bench-scale A/B confirms neutrality
-        # (bench/ab_conf.py cachedpart_off).
+        # below eager_barrier_min_docs, latency_regime below), where
+        # this flag is never consulted. The r6 bench-scale A/B that
+        # showed it neutral there ran its cachedpart_off overlay against
+        # the pre-revert tree (true as the session default); on this
+        # tree the live counterfactual is the overlay that sets it true
+        # (bench/ab_conf.py aqe_cache, bench/ab_rung.py cachedpart_on).
     )
     pool_file = _fair_pool_file()
     if pool_file:
@@ -201,3 +205,58 @@ def get_spark(
         )
     sc.setLogLevel("WARN")
     return spark
+
+
+_AQE = "spark.sql.adaptive.enabled"
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def session_confs(confs: dict[str, str], *sessions: SparkSession):
+    """Set ``confs`` on every session for the block, then put back each
+    session's prior values (unset where it had none), whether or not the
+    block raised. Sessions are shared — tests and long-lived drivers run
+    many pipelines per session, and the session ``foreachBatch`` hands a
+    micro-batch is reused for the next one — so a tuned conf must never
+    outlive the work it was tuned for."""
+    saved = [(s, {k: s.conf.get(k, None) for k in confs}) for s in sessions]
+    for s in sessions:
+        for k, v in confs.items():
+            s.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for s, prior in saved:
+            for k, v in prior.items():
+                if v is None:
+                    s.conf.unset(k)
+                else:
+                    s.conf.set(k, v)
+
+
+@contextmanager
+def latency_regime(n_docs: int, barrier: int, *sessions: SparkSession):
+    """The small-input regime, decided and applied in one place.
+
+    Below ``barrier`` (``DedupConfig.eager_barrier_min_docs``) the plans
+    are dozens of tiny exchanges, and with AQE each exchange becomes its
+    own query-stage materialization job: ~150 driver round-trips per
+    batch run at bench scale (r6 event log), ~80 per ingest micro-batch,
+    a serial floor no executor count amortizes. AQE's runtime re-planning
+    buys nothing on kB-sized shuffles, so for the block every session in
+    ``sessions`` runs with AQE off and a shuffle width derived from the
+    input (~500 docs per partition, floor 8, capped at the first
+    session's ambient width). Yields that width. At or above the barrier
+    nothing is touched and it yields None: AQE coalescing, skew splits
+    and the wide shuffle width are exactly right for data that size.
+
+    Pass every session that plans the block's frames: a micro-batch
+    frame from ``foreachBatch`` plans in a cloned session that confs set
+    on the outer session do not reach."""
+    if n_docs >= barrier:
+        yield None
+        return
+    ambient = int(sessions[0].conf.get(_WIDTH, "200"))
+    width = max(8, min(ambient, -(-n_docs // 500)))
+    with session_confs({_AQE: "false", _WIDTH: str(width)}, *sessions):
+        yield width

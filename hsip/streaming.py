@@ -51,6 +51,7 @@ from .catalog import Catalog
 from .config import DedupConfig
 from .incremental import incremental_verified_pairs
 from .lsh import band_table
+from .session import latency_regime
 from .textkernel import featurize
 
 
@@ -206,14 +207,20 @@ def run_incremental_ingest(
                          this whole append-once is a MERGE into a table
                          bucketed by bucket(N, a, b).
         """
-        cached = None
         if scope == "stream":
+            # one eager job materializes the delta into a FLAT plan (the
+            # batch path's flat_stage): the bucket collect, the anti-join
+            # and the write below then scan it instead of each
+            # re-planning the whole verify chain
             df = df.withColumn(
                 "pair_bucket",
                 F.pmod(F.xxhash64(*keys), F.lit(N_PAIR_BUCKETS)),
-            ).cache()
-            cached = df  # df is rebound below; unpersist THIS frame
-        if catalog.exists(ident):
+            ).localCheckpoint(eager=True)
+        # batch scope: no batch_id=<N> partition on disk means no prior
+        # attempt of this batch left rows, so there is nothing to read
+        if catalog.exists(ident) and (
+            scope == "stream" or catalog.may_hold(ident, "batch_id", batch_id)
+        ):
             prior = pruned_prior(catalog, ident, df, keys, stream_id,
                                  scope=scope, batch_id=batch_id)
             df = df.join(prior.select(keys), keys, "left_anti")
@@ -226,11 +233,10 @@ def run_incremental_ingest(
         # latest_index_versions orders and joins null-safely.
         catalog.write(df, ident, mode="append", partition_by=part,
                       evolve_schema=True)
-        if cached is not None:
-            cached.unpersist()
 
     def process_batch(batch_turns: DataFrame, batch_id: int) -> None:
-        if batch_turns.isEmpty():
+        n_turns = batch_turns.count()
+        if not n_turns:
             return
         # replayed batch whose commit marker exists: true no-op
         if catalog.exists("stream.batches"):
@@ -244,6 +250,19 @@ def run_incremental_ingest(
             )
             if committed:
                 return
+        # Regime from observable sizes: the batch's turns (an upper bound
+        # on its conversations) plus the index's document versions, which
+        # latest_index_versions groups on every batch — so a large index
+        # keeps the session defaults however small the delta. Both
+        # sessions plan this batch's frames: foreachBatch hands over a
+        # frame of a cloned session, catalog reads plan in ``spark``.
+        n_index = (catalog.row_count("index.features")
+                   if catalog.exists("index.features") else 0)
+        with latency_regime(n_turns + n_index, cfg.eager_barrier_min_docs,
+                            spark, batch_turns.sparkSession):
+            _ingest_batch(batch_turns, batch_id)
+
+    def _ingest_batch(batch_turns: DataFrame, batch_id: int) -> None:
         from .reassemble import dedupe_turn_versions, reassemble
 
         convs = reassemble(dedupe_turn_versions(batch_turns)).select(

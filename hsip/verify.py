@@ -32,7 +32,7 @@ def measured_size_bytes(df: DataFrame) -> int | None:
     """
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j edge
+    except Exception:  # py4j/private-API failure: decline, never guess
         return None
 
 

@@ -52,6 +52,53 @@ def test_append_after_empty_overwrite(spark, tmp_path):
     assert cat.read("t.c").count() == 4
 
 
+def test_row_count_tracks_commits_without_a_scan(spark, tmp_path):
+    """Every parquet commit records its row count in the manifest (read
+    off the written files' footers), so row_count() is a metadata read;
+    a table whose manifest predates counting falls back to count()."""
+    import json
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.write(_pairs(spark, 5, 0), "t.n", mode="append", partition_by=["batch_id"])
+    cat.write(_pairs(spark, 3, 1), "t.n", mode="append", partition_by=["batch_id"])
+    cat.write(_pairs(spark, 2, 1).filter(F.lit(False)), "t.n", mode="append",
+              partition_by=["batch_id"])
+    assert cat.manifest("t.n")["num_rows"] == 8 == cat.row_count("t.n")
+    cat.write(_pairs(spark, 4, 2), "t.n", mode="overwrite", partition_by=["batch_id"])
+    assert cat.row_count("t.n") == 4
+    cat.write(_pairs(spark, 4, 2).filter(F.lit(False)), "t.n",
+              mode="overwrite", partition_by=["batch_id"])
+    assert cat.row_count("t.n") == 0
+    cat.write(_pairs(spark, 6, 3), "t.n", mode="append", partition_by=["batch_id"])
+    assert cat.row_count("t.n") == 6
+
+    # legacy manifest without a count: appends keep it uncounted and
+    # row_count() scans
+    man_path = os.path.join(cat._path("t.n"), "_MANIFEST.json")
+    man = cat.manifest("t.n")
+    del man["num_rows"]
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    cat.write(_pairs(spark, 1, 4), "t.n", mode="append", partition_by=["batch_id"])
+    assert "num_rows" not in cat.manifest("t.n")
+    assert cat.row_count("t.n") == 7
+
+
+def test_may_hold_rules_out_only_absent_partitions(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.write(_pairs(spark, 1, 0).filter(F.lit(False)), "t.p",
+              mode="overwrite", partition_by=["batch_id"])
+    assert not cat.may_hold("t.p", "batch_id", 0)  # schema-only table
+    cat.write(_pairs(spark, 3, 7), "t.p", mode="append", partition_by=["batch_id"])
+    assert cat.may_hold("t.p", "batch_id", 7)
+    assert not cat.may_hold("t.p", "batch_id", 8)
+    # not partitioned on the column: cannot rule anything out
+    assert cat.may_hold("t.p", "k", "k0")
+    cat.write(_pairs(spark, 3, 7), "t.flat", mode="overwrite")
+    assert cat.may_hold("t.flat", "batch_id", 8)
+
+
 def test_append_layout_mismatch_fails_fast(spark, tmp_path):
     """Appending with a different partition_by than the table's recorded
     layout would produce a mixed root-files/key=value tree that Spark

@@ -410,3 +410,57 @@ def test_restart_new_checkpoint_resolves_latest_across_lineages(spark, tmp_path)
     run_incremental_ingest(spark, str(inp), wh, str(tmp_path / "ckptB"), cfg)
     verified = {(r.a, r.b) for r in cat.read("stream.verified").collect()}
     assert ("u1", "w4") in verified and ("ref", "w4") in verified
+
+
+def test_micro_batch_regime_restores_both_sessions(spark, tmp_path, monkeypatch):
+    """A small micro-batch runs in the latency regime (AQE off, derived
+    shuffle width) in BOTH sessions that plan its frames: the outer one
+    and the clone foreachBatch hands over. Neither keeps the tuned confs
+    once the batch ends, also when the batch raises."""
+    import hsip.streaming as S
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    seen = []
+    real = S.incremental_verified_pairs
+    fail = [False]
+
+    def spy(new_docs, *args, **kwargs):
+        clone = new_docs.sparkSession
+        seen.append((clone, {k: clone.conf.get(k) for k in keys},
+                     {k: spark.conf.get(k) for k in keys}))
+        if fail[0]:
+            raise RuntimeError("injected micro-batch failure")
+        return real(new_docs, *args, **kwargs)
+
+    monkeypatch.setattr(S, "incremental_verified_pairs", spy)
+    inp = tmp_path / "inr"
+    inp.mkdir()
+    wh, ckpt = str(tmp_path / "whr"), str(tmp_path / "ckptr")
+    cfg = DedupConfig(jaccard_threshold=0.7)
+    t0 = datetime(2025, 6, 1)
+    prior_width = spark.conf.get(keys[1])
+    # wider than any derived width, so a leaked width is visible
+    spark.conf.set(keys[1], "64")
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        tuned = {keys[0]: "false", keys[1]: "8"}
+
+        _write_wave(str(inp / "w1.parquet"), {"r1": ["alpha beta " * 30]}, t0)
+        run_incremental_ingest(spark, str(inp), wh, ckpt, cfg)
+        clone, in_clone, in_outer = seen[-1]
+        assert not clone._jsparkSession.equals(spark._jsparkSession)
+        assert in_clone == tuned and in_outer == tuned
+        assert {k: spark.conf.get(k) for k in keys} == before
+        assert {k: clone.conf.get(k) for k in keys} == before
+
+        fail[0] = True
+        _write_wave(str(inp / "w2.parquet"), {"r2": ["gamma delta " * 30]},
+                    t0 + timedelta(hours=1))
+        with pytest.raises(Exception, match="injected micro-batch failure"):
+            run_incremental_ingest(spark, str(inp), wh, ckpt, cfg)
+        clone, in_clone, in_outer = seen[-1]
+        assert in_clone == tuned and in_outer == tuned
+        assert {k: spark.conf.get(k) for k in keys} == before
+        assert {k: clone.conf.get(k) for k in keys} == before
+    finally:
+        spark.conf.set(keys[1], prior_width)
