@@ -17,8 +17,6 @@ stage checkpoint write (or cache for ephemeral runs). Candidate channels:
 
 from __future__ import annotations
 
-import os
-import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -31,13 +29,11 @@ from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, input_fingerprint
 from .config import DedupConfig
-from .lsh import band_table, lsh_candidates, pairs_from_buckets
+from .lsh import band_table, pairs_from_buckets
 from .metrics import Recorder, StageTimer
-from .minhash import attach_minhash
 from .reassemble import dedupe_turn_versions, reassemble
 from .session import latency_regime
-from .shingle import shingle_docs
-from .simhash import attach_simhash, hamming_block_table, simhash_candidates
+from .simhash import hamming_block_table, probe_key_entropy
 from .suffixes import (
     exact_substr_within_groups,
     fingerprint_table,
@@ -69,10 +65,11 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
     executors idle; serialized, those idle tails add up to ~20% of wall
     at small executor counts (BENCH/BASELINE.md). Submitting the chains
     from separate threads (one FAIR scheduler pool each — see session.py)
-    lets one channel's tasks backfill another's straggler waves. Shared
-    upstream frames (base, features) are cached + eagerly materialized
-    BEFORE the threads start, so no subtree is recomputed concurrently
-    (the lazy-cache trap the eager counts exist to prevent).
+    lets one channel's tasks backfill another's straggler waves. The
+    shared upstream frame (base) is cached + eagerly materialized BEFORE
+    the threads start, so no subtree is recomputed concurrently (the
+    lazy-cache trap the eager counts exist to prevent); the features
+    frame has one consumer, the mh_sh thread that builds it.
 
     Checkpointed runs are safe too: each stage writes its own table and
     the Recorder only appends driver-side. Channel order in the result is
@@ -82,10 +79,9 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
     concurrent beats sequential at BOTH 1-core (286.8 s vs 303.3 s —
     planning of one chain overlaps execution of another even with a
     single task slot) and 4-core executors (150.3 s vs 172.8 s).
-    HSIP_CHANNEL_CONCURRENCY=0 forces the sequential path.
     """
     sc = spark.sparkContext
-    if len(builders) <= 1 or os.environ.get("HSIP_CHANNEL_CONCURRENCY", "1") == "0":
+    if len(builders) <= 1:
         return [build() for _, build in builders]
     from concurrent.futures import ThreadPoolExecutor
 
@@ -232,8 +228,6 @@ def run_documents(
             # key-entropy advisory (config.py simhash_bits sizing rule): fail
             # LOUDLY when the corpus outgrows the probe keys' collision budget
             # instead of silently flooding verify with random candidates
-            from .simhash import probe_key_entropy
-
             entropy = probe_key_entropy(cfg, n_docs)
             stats["probe_key_entropy"] = entropy
             if rec:
@@ -295,134 +289,62 @@ def run_documents(
                 "id", "text"
             )
 
-        # Featurization is built LAZILY, inside whichever channel builder
-        # consumes it (exactly one does in every configuration), so the
-        # substring channel — which reads only `base` — starts at t=0 and
-        # overlaps the featurization pass instead of waiting behind it.
-        # On a 1-slot rung this changes nothing (work serializes anyway);
-        # on multi-executor rungs it removes the featurize stage from the
-        # pipeline's critical path (BENCH/BASELINE.md round 5: ~107 s of
-        # 4-slot wall at 2.76M turns ran before the channels forked). The
-        # lock makes the once-init safe if a future config ever shares the
-        # feature frames across two builder threads.
-        shingles = sigs = simhashes = feats = None
-        _feat_lock = threading.Lock()
-        _sh_lock = threading.Lock()
-
-        def _ensure_features(mh: bool = True, sh: bool = True):
-            nonlocal shingles, sigs, simhashes, feats
-            if cfg.fused_kernel and (need_mh or need_sh):
-                # one Arrow pass computes shingles+sig+simhash (textkernel.py)
-                # — indivisible, so one lock and one builder
-                with _feat_lock:
-                    if shingles is None and simhashes is None:
-                        feats = stage(
-                            "features",
-                            lambda: featurize(chan_base, "id", "text", cfg))
-                        scratch.append(feats)
-                        shingles = feats.select("id", "shingles")
-                        sigs = feats.select("id", "sig")
-                        simhashes = feats.select("id", "simhash")
-                return
-            # non-fused: separate guards per feature family, and each caller
-            # asks only for what its channel needs — the minhash and simhash
-            # builds run CONCURRENTLY on the two channel threads instead of
-            # the first arrival serializing both under one lock
-            if mh and need_mh:
-                with _feat_lock:
-                    if shingles is None:
-                        shingles = stage(
-                            "shingles",
-                            lambda: shingle_docs(chan_base, "id", "text", cfg))
-                        sigs = stage(
-                            "minhash", lambda: attach_minhash(shingles, cfg),
-                            reuse=False)
-                        scratch.append(shingles)
-            if sh and need_sh:
-                with _sh_lock:
-                    if simhashes is None:
-                        simhashes = stage(
-                            "simhash",
-                            lambda: attach_simhash(chan_base, "id", "text", cfg))
-                        scratch.append(simhashes)
-
-        def _mh_channel() -> DataFrame:
-            _ensure_features(sh=False)
-
-            def build_lsh():
-                pairs, hot = lsh_candidates(sigs, cfg, scratch=scratch,
-                                            eager=eager_barriers)
-                if rec:
-                    n_hot = hot.count()
-                    rec.metric("lsh_candidates", "hot_buckets_star_paired", n_hot)
-                return pairs
-
-            lsh_pairs = stage("lsh_candidates", build_lsh, reuse=False)
-            return stage(
-                "verify_jaccard",
-                lambda: V.verify_jaccard(lsh_pairs, shingles, cfg,
-                                         scratch=scratch),
-                reuse=False,
-            )
-
-        def _sh_channel() -> DataFrame:
-            _ensure_features(mh=False)
-
-            def build_sim():
-                pairs, hot = simhash_candidates(simhashes, cfg, scratch=scratch,
-                                                eager=eager_barriers)
-                if rec:
-                    rec.metric("simhash_candidates", "hot_buckets_star_paired", hot.count())
-                return pairs
-
-            sim_pairs = stage("simhash_candidates", build_sim, reuse=False)
-            return stage(
-                "verify_hamming",
-                lambda: V.verify_hamming(sim_pairs, simhashes, cfg),
-                reuse=False,
-            )
-
         def _mh_sh_channel() -> DataFrame:
-            """Fused MinHash+SimHash chain (VERDICT.md r2 item 1): both
-            channels' buckets union into ONE cached table, expand through ONE
-            shuffle chain, and verify through ONE hydration against the
-            cached features table — roughly half the shuffle stages of the
-            two separate chains, with identical pairs and verdicts (pinned by
-            tests/test_e2e_oracle.py's 3-channel brute-force oracle)."""
-            _ensure_features()
+            """The MinHash/SimHash chain, for any subset of the two channels
+            (VERDICT.md r2 item 1): the requested channels' buckets union
+            into ONE cached table, expand through ONE shuffle chain, and
+            verify through ONE hydration against the cached features table.
+            pairs_from_buckets(channel=None) and verify_jaccard_hamming
+            dispatch per row on the ``channel`` column, so a single-channel
+            run is the same chain over that channel's bucket rows only.
+
+            Featurization is built HERE, lazily, so the substring channel —
+            which reads only `base` — starts at t=0 and overlaps the
+            featurization pass instead of waiting behind it. On a 1-slot rung
+            this changes nothing (work serializes anyway); on multi-executor
+            rungs it removes the featurize stage from the pipeline's critical
+            path (BENCH/BASELINE.md round 5: ~107 s of 4-slot wall at 2.76M
+            turns ran before the channels forked). One Arrow pass computes
+            shingles + sig + simhash (textkernel.py)."""
+            feats = stage("features", lambda: featurize(chan_base, "id", "text", cfg))
+            scratch.append(feats)
 
             def build_cands():
-                mh = band_table(sigs, cfg).select(
-                    F.lit("minhash_lsh").alias("channel"), "id",
-                    F.col("band_id").alias("bkt_id"),
-                    F.col("band_hash").alias("bkt_hash"),
-                    # null payload typed to the fingerprint layout (config.py
-                    # simhash_bits: long at 64, array<bigint> lanes at 128)
-                    # so the channel union stays type-compatible
-                    F.lit(None)
-                    .cast("long" if cfg.simhash_bits == 64 else "array<bigint>")
-                    .alias("simhash"),
-                )
-                # simhash payload (8 B/row on the sh rows, null on mh rows)
-                # rides through the pair expansion so Hamming verification is
-                # a projection of the pair table — no join for the channel
-                # whose candidate count can go quadratic (verify.py r4 note)
-                sh = hamming_block_table(simhashes, cfg).select(
-                    F.lit("simhash").alias("channel"), "id",
-                    F.col("table_id").alias("bkt_id"),
-                    F.col("key_hash").alias("bkt_hash"), "simhash",
-                )
+                parts = []
+                if need_mh:
+                    parts.append(band_table(feats.select("id", "sig"), cfg).select(
+                        F.lit("minhash_lsh").alias("channel"), "id",
+                        F.col("band_id").alias("bkt_id"),
+                        F.col("band_hash").alias("bkt_hash"),
+                        # null payload typed to the fingerprint layout
+                        # (config.py simhash_bits: long at 64, array<bigint>
+                        # lanes at 128) so the channel union stays
+                        # type-compatible
+                        F.lit(None)
+                        .cast("long" if cfg.simhash_bits == 64 else "array<bigint>")
+                        .alias("simhash"),
+                    ))
+                if need_sh:
+                    # simhash payload (8 B/row on the sh rows, null on mh
+                    # rows) rides through the pair expansion so Hamming
+                    # verification is a projection of the pair table — no
+                    # join for the channel whose candidate count can go
+                    # quadratic (verify.py r4 note)
+                    parts.append(hamming_block_table(feats.select("id", "simhash"), cfg).select(
+                        F.lit("simhash").alias("channel"), "id",
+                        F.col("table_id").alias("bkt_id"),
+                        F.col("key_hash").alias("bkt_hash"), "simhash",
+                    ))
+                buckets = parts[0]
+                for part in parts[1:]:
+                    buckets = buckets.unionByName(part)
                 # cache + eager count: pairs_from_buckets contract (sizes
                 # groupBy and join-back both scan the bucket table)
-                both = (
-                    mh.unionByName(sh)
-                    .repartition("channel", "bkt_id", "bkt_hash")
-                    .cache()
-                )
-                both.count()
-                scratch.append(both)
+                buckets = buckets.repartition("channel", "bkt_id", "bkt_hash").cache()
+                buckets.count()
+                scratch.append(buckets)
                 pairs, hot = pairs_from_buckets(
-                    both, cfg.bucket_cap,
+                    buckets, cfg.bucket_cap,
                     bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
                     hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
                     payload_cols=("simhash",),
@@ -493,15 +415,8 @@ def run_documents(
             return out
 
         builders = []
-        if need_mh and need_sh and cfg.fused_kernel:
-            # fused-kernel runs hold (shingles, sig, simhash) in one cached
-            # frame -> the unified single-hydration chain applies
+        if need_mh or need_sh:
             builders.append(("mh_sh", _mh_sh_channel))
-        else:
-            if need_mh:
-                builders.append(("minhash_lsh", _mh_channel))
-            if need_sh:
-                builders.append(("simhash", _sh_channel))
         if "substr" in channels:
             builders.append(("substr", _sub_channel))
 

@@ -242,6 +242,7 @@ def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
         cfg.bucket_cap,
         bucket_cols=("table_id", "key_hash"),
         channel="simhash",
+        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
         payload_cols=("simhash",),
         scratch=scratch, eager=eager,
     )

@@ -17,7 +17,7 @@ from .config import DedupConfig
 
 # Build-side budget for the latency-mode broadcast hydrations below.
 # 256 MB is comfortably inside the pipeline's driver budget (session.py
-# HSIP_DRIVER_MEM 24g default) and far under Spark's 8 GB broadcast
+# derives the default heap from host RAM) and far under Spark's 8 GB broadcast
 # hard limit; the gate reads MEASURED bytes, so an oversized corpus
 # simply keeps the shuffle-join shape.
 _BCAST_HYDRATE_MAX_BYTES = 256 * 1024 * 1024
@@ -263,7 +263,7 @@ def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
     has_payload = "simhash_a" in pairs.columns
     cols = ["shingles"] if has_payload else ["shingles", "simhash"]
     # ``features`` is cached + counted before any channel verifies
-    # (pipeline._ensure_features), so this is the MEASURED cache size.
+    # (pipeline's features stage), so this is the MEASURED cache size.
     # Known-small -> broadcast hydration: one reused build replaces the
     # two sort-merge joins whose narrow-width exchanges ship the shingle
     # arrays twice and pin the Jaccard projection at the latency shuffle

@@ -26,7 +26,7 @@ tok AS (
     SELECT id, nt, list_filter(string_split(nt, ' '), x -> x <> '') AS toks
     FROM t
 ),
-sh AS (
+sh AS MATERIALIZED (
     SELECT id,
            CASE
                WHEN nt = '' THEN []::VARCHAR[]
@@ -39,7 +39,7 @@ sh AS (
            END AS s
     FROM tok
 ),
-pairs AS (
+pairs AS MATERIALIZED (
     SELECT a.id AS ia, b.id AS ib
     FROM sh a JOIN sh b ON a.id < b.id
     WHERE len(list_distinct(list_concat(a.s, b.s))) > 0
@@ -77,7 +77,11 @@ def test_transcript_clusters_match_duckdb_cc(spark):
     pdf = convs.toPandas().rename(
         columns={"conv_id": "id", "doc_text": "text"}
     )
-    con = duckdb.connect()
+    # sh/pairs are MATERIALIZED above: DuckDB 1.0 otherwise inlines each
+    # CTE at every reference and rebuilds the shingle lists several times
+    # (12.1 GB -> 4.7 GB peak RSS, same 83 rows / 67 clusters). The limit
+    # and thread count keep the oracle beside the test session's JVM.
+    con = duckdb.connect(config={"memory_limit": "6GB", "threads": 2})
     con.register("docs", pdf)
     theirs = set(map(tuple, con.execute(_ORACLE).fetchall()))
 

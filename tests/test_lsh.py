@@ -98,10 +98,11 @@ def test_s_curve_candidate_probability(spark):
 
 
 def test_unified_channel_pairs_equal_separate(spark):
-    """The fused mh+sh bucket expansion (one union table, dynamic channel
+    """The unified bucket expansion (one union table, dynamic channel
     column) must produce exactly the per-channel union of the separate
-    lsh_candidates + simhash_candidates runs."""
-    from hsip.simhash import attach_simhash, simhash_candidates
+    lsh_candidates + simhash_candidates runs — for both channels and for
+    each channel alone, the subsets run_documents feeds it."""
+    from hsip.simhash import hamming_block_table, simhash_candidates
     from hsip.textkernel import featurize
 
     cfg = DedupConfig(bucket_cap=64)
@@ -120,24 +121,31 @@ def test_unified_channel_pairs_equal_separate(spark):
 
     sep_mh, _ = lsh_candidates(sigs, cfg)
     sep_sh, _ = simhash_candidates(sims, cfg)
-    sep = {(r.a, r.b, r.channel) for df in (sep_mh, sep_sh) for r in df.collect()}
-
-    from hsip.simhash import hamming_block_table
-
-    mh = band_table(sigs, cfg).select(
-        F.lit("minhash_lsh").alias("channel"), "id",
-        F.col("band_id").alias("bkt_id"), F.col("band_hash").alias("bkt_hash"))
-    sh = hamming_block_table(sims, cfg).select(
-        F.lit("simhash").alias("channel"), "id",
-        F.col("table_id").alias("bkt_id"), F.col("key_hash").alias("bkt_hash"))
-    both = mh.unionByName(sh).repartition("channel", "bkt_id", "bkt_hash").cache()
-    both.count()
-    uni_pairs, _ = pairs_from_buckets(
-        both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
-        channel=None,
-    )
-    uni = {(r.a, r.b, r.channel) for r in uni_pairs.collect()}
-    assert uni == sep and uni, uni ^ sep
+    separate = {
+        "minhash_lsh": {(r.a, r.b, r.channel) for r in sep_mh.collect()},
+        "simhash": {(r.a, r.b, r.channel) for r in sep_sh.collect()},
+    }
+    tables = {
+        "minhash_lsh": band_table(sigs, cfg).select(
+            F.lit("minhash_lsh").alias("channel"), "id",
+            F.col("band_id").alias("bkt_id"), F.col("band_hash").alias("bkt_hash")),
+        "simhash": hamming_block_table(sims, cfg).select(
+            F.lit("simhash").alias("channel"), "id",
+            F.col("table_id").alias("bkt_id"), F.col("key_hash").alias("bkt_hash")),
+    }
+    for subset in (("minhash_lsh",), ("simhash",), ("minhash_lsh", "simhash")):
+        buckets = tables[subset[0]]
+        for ch in subset[1:]:
+            buckets = buckets.unionByName(tables[ch])
+        buckets = buckets.repartition("channel", "bkt_id", "bkt_hash").cache()
+        buckets.count()
+        uni_pairs, _ = pairs_from_buckets(
+            buckets, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
+            channel=None,
+        )
+        uni = {(r.a, r.b, r.channel) for r in uni_pairs.collect()}
+        sep = set().union(*(separate[ch] for ch in subset))
+        assert uni == sep and uni, (subset, uni ^ sep)
 
 
 def test_payload_passthrough_small_star_salt(spark):

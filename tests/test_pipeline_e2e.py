@@ -123,7 +123,7 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path_factory):
         spark, docs, "conv_id", "doc_text", cfg,
         channels=("minhash_lsh",), warehouse=wh, run_id="runA",
     )
-    assert {"features", "shingles"} & set(r2.stats["skipped_stages"])
+    assert "features" in r2.stats["skipped_stages"]
     assert "clusters" in r2.stats["computed_stages"]
     second = {(r.id, r.cluster_id) for r in r2.clusters.collect()}
     assert first == second

@@ -163,13 +163,12 @@ def test_icws_signature_is_multiset_function(pairs, seed):
     assert (sigs[0] == sigs[1]).all()
 
 
-def test_empty_docs_cluster_identically_on_both_featurizations(spark):
+def test_empty_docs_cluster_as_exact_duplicates(spark):
     """Two docs whose text normalizes to empty must verify as exact
-    duplicates (jaccard 1.0) under BOTH the fused kernel and the SQL
-    shingle path: the fused kernel previously emitted an empty shingle
-    array for 0-token docs (jaccard 0, not clustered) while the SQL
-    path's whole-doc-hash fallback clustered them — same corpus and
-    config, different clusters on the fused_kernel toggle."""
+    duplicates (jaccard 1.0) and stay apart from real text. The kernel
+    once emitted an empty shingle array for 0-token docs (jaccard 0, not
+    clustered) where the SQL shingler's whole-doc-hash fallback clustered
+    them."""
     from hsip.config import DedupConfig
     from hsip.pipeline import run_documents
 
@@ -178,19 +177,32 @@ def test_empty_docs_cluster_identically_on_both_featurizations(spark):
          ("y", "some real text here " * 10)],
         ["doc_id", "text"],
     )
-    got = {}
-    for fused in (True, False):
-        cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1,
-                          jaccard_threshold=0.5, fused_kernel=fused)
-        res = run_documents(spark, docs, "doc_id", "text", cfg,
-                            channels=("minhash_lsh",))
-        labels = {r["id"]: r["cluster_id"]
-                  for r in res.clusters.collect()}
-        got[fused] = labels
-        assert labels["e1"] == labels["e2"], f"fused={fused}"
-        assert labels["x"] == labels["y"], f"fused={fused}"
-        assert labels["e1"] != labels["x"], f"fused={fused}"
-    assert got[True] == got[False]
+    cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1,
+                      jaccard_threshold=0.5)
+    res = run_documents(spark, docs, "doc_id", "text", cfg,
+                        channels=("minhash_lsh",))
+    labels = {r["id"]: r["cluster_id"] for r in res.clusters.collect()}
+    assert labels["e1"] == labels["e2"]
+    assert labels["x"] == labels["y"]
+    assert labels["e1"] != labels["x"]
+
+
+def test_empty_docs_one_shingle_in_both_featurizers(spark):
+    """The fused kernel and the SQL shingler (still the reference for the
+    contract queries) agree on empty-normalized docs: each gives them a
+    one-element shingle set, the same set for every such doc."""
+    from hsip.config import DedupConfig
+    from hsip.shingle import shingle_docs
+    from hsip.textkernel import featurize
+
+    docs = spark.createDataFrame([("e1", ""), ("e2", "   ")],
+                                 ["doc_id", "text"])
+    cfg = DedupConfig()
+    for feats in (featurize(docs, "doc_id", "text", cfg),
+                  shingle_docs(docs, "doc_id", "text", cfg)):
+        sets = {r["id"]: set(r["shingles"]) for r in feats.collect()}
+        assert len(sets["e1"]) == 1
+        assert sets["e1"] == sets["e2"]
 
 
 def test_config_rejects_degenerate_banding_and_winnowing():

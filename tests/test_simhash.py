@@ -94,6 +94,33 @@ def test_near_identical_found_by_blocks(spark):
     assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
 
 
+def test_candidates_honor_salt_policy(spark):
+    """simhash_candidates applies cfg.hot_bucket_policy, as lsh_candidates
+    does: under "salt" an over-cap bucket splits into pmod(xxhash64(id),
+    ceil(bsz/cap)) sub-buckets with all-pairs inside each, instead of a
+    star around the bucket minimum."""
+    cfg = DedupConfig(bucket_cap=4, hot_bucket_policy="salt")
+    # one shared fingerprint: every probe table holds one 20-member bucket
+    df = spark.createDataFrame(
+        [(f"id{i:02d}", 12345) for i in range(20)], "id string, simhash long"
+    )
+    pairs, hot = simhash_candidates(df, cfg)
+    got = {(r.a, r.b) for r in pairs.collect()}
+    assert hot.count() == 56  # C(8, 5) probe tables, all over the cap
+    salt_of = {
+        r.id: r.s for r in df.select(
+            "id", F.pmod(F.xxhash64("id", F.lit(cfg.seed)), F.lit(5)).alias("s")
+        ).collect()
+    }
+    want = {
+        (a, b) for a in salt_of for b in salt_of
+        if a < b and salt_of[a] == salt_of[b]
+    }
+    assert got == want
+    # not a star: some pair joins two members other than the minimum
+    assert any(a != "id00" for a, _ in got)
+
+
 def test_empty_text_zero(spark):
     cfg = DedupConfig()
     df = spark.createDataFrame([(1, ""), (2, None)], "doc_id int, text string")

@@ -3,9 +3,9 @@
 
 Pins: lane-0 compatibility with the 64-bit fingerprint, the probing
 guarantee over lane-local blocks, the array-lane Hamming verify
-expression, end-to-end pipeline equality on planted near-dups through
-BOTH featurization paths (fused kernel and SQL+attach), and the entropy
-advisory reading 80-bit keys.
+expression, end-to-end pipeline equality on planted near-dups for the
+simhash-only and all-channels runs, and the entropy advisory reading
+80-bit keys.
 """
 
 import numpy as np
@@ -92,12 +92,14 @@ def test_hamming_verify_array_lanes(spark):
 
 def test_pipeline_e2e_128_both_featurize_paths(spark):
     """run_documents at simhash_bits=128 clusters planted near-identical
-    docs through BOTH physical featurizations: simhash-only (SQL+attach
-    path) and all-channels (fused mapInPandas kernel). The planted pair
-    differs only by case + whitespace (normalizer-invariant -> Hamming 0
-    on every lane in both paths — a one-token edit flips ~7 of 128 bits
-    in expectation, past d=3, so nonzero-distance recall is pinned by the
-    skip-guarded probing test above, not here). This test pins the
+    docs for both channel subsets that carry 128-bit fingerprints:
+    simhash-only and all-channels (both featurize through the fused
+    mapInPandas kernel; simhash-only unions only the probe-table rows
+    into the bucket chain). The planted pair differs only by case +
+    whitespace (normalizer-invariant -> Hamming 0 on every lane — a
+    one-token edit flips ~7 of 128 bits in expectation, past d=3, so
+    nonzero-distance recall is pinned by the skip-guarded probing test
+    above, not here). This test pins the
     wiring: array fingerprints through blocks -> union -> lane-aware
     verify -> CC, at the default collapse_exact=False (no exact pre-pass
     shortcuts the simhash channel)."""
